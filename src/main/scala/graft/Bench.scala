@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.QueryDef
+
 /** Bench harness (BASELINE.md §2): wall-clock per query at
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
   *
@@ -13,106 +15,35 @@ import org.apache.spark.sql.SparkSession
   * itself, whose transient stalls (JIT, page cache, competing processes)
   * are indistinguishable from regressions. The same harness records the
   * baseline, so comparisons are self-consistent.
+  *
+  * A failed query prints its FAILED line, is recorded as -1 in the map,
+  * still adds its elapsed wall time to the total (a failure never makes
+  * the suite look faster) and makes the run exit non-zero.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the host's real parallelism: a fixed local[32] on a
-    // smaller machine oversubscribes and skews recorded baselines
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    // optional comma-separated query-name filter for focused runs
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // optional comma-separated query-name prefixes for focused runs
+    val only = sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", "")
     // Shuffle-partition override for scale probes: the default pins
     // partitions = cores, which at 20x data leaves ~750 MB per
     // partition sort — past the per-task execution memory and into
     // spill amplification (the d26 sf2.0 adjudication, SCALE.md r15
     // batch 2). A cluster sizes partitions to the data; this knob lets
     // a probe do the same without changing the canonical harness.
-    val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-      .filter(_.nonEmpty).getOrElse(cpus)
     def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", shufflePartitions)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      // ERROR, not WARN: the per-query sweep's blocking unpersist of
-      // localCheckpointed frames logs a (harmless, intended) WARN per
-      // RDD — hundreds of lines per suite that would bury the one JSON
-      // line the driver tails this main for
-      s.sparkContext.setLogLevel("ERROR")
+      val s = Harness.session()
+      sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").filter(_.nonEmpty)
+        .foreach(s.conf.set("spark.sql.shuffle.partitions", _))
       s
     }
     var spark = newSession()
-    // A/B diagnostic toggle for the sweep (default on)
-    val sweepOn = sys.env.getOrElse("SPARK_GRAFT_SWEEP", "on") != "off"
-
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => return -1.0 }
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    def timeOne(q: graft.queries.QueryDef): Double = {
-      // Clean slate before each query. r13 adjudication: the graph
-      // family — last in registry order — ran +26% in-suite while
-      // focused medians sat at baseline; the mechanism is accumulated
-      // JVM state the ContextCleaner only releases asynchronously.
-      // r14's System.gc() helped the builder's machine but the
-      // driver's BENCH_r14 still spiked g10 4.29x, because a GC only
-      // ENQUEUES the weak refs — the cleaner thread then drains them
-      // (block-manager RPC per RDD/broadcast/shuffle) concurrently
-      // with the next timed run. r15 makes the sweep DETERMINISTIC
-      // instead of GC-timing-dependent:
-      //   1. blocking-unpersist every persistent RDD still registered
-      //      (localCheckpoint frames a query didn't — or couldn't —
-      //      release; synchronous block removal, no cleaner involved),
-      //   2. drop any cached plans,
-      //   3. one GC to enqueue dead broadcasts/shuffles, then a short
-      //      untimed drain window for the cleaner's async RPCs so they
-      //      don't land inside the next measurement.
-      // All untimed; ~0.2 s x |registry| of harness overhead. The
-      // SessionScoped memo frames (d04/d07 shared stage, s03b's pinned
-      // assignment) are exempt: they are localCheckpointed with
-      // truncated lineage, so sweeping them would hard-fail every later
-      // consumer — and re-materializing the shared stage per query is
-      // precisely the cost the memo (and the baseline it was recorded
-      // under) deliberately excludes.
-      if (sweepOn) {
-        val keep = graft.core.SessionScoped.livePersistedRddIds(spark)
-        spark.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => keep(id) }
-          .values.foreach(_.unpersist(blocking = true))
-        spark.catalog.clearCache()
-        System.gc()
-        Thread.sleep(200)
-      }
-      val warmup = once(q.build)
-      if (warmup < 0 || runs < 1) warmup
-      else if (warmup > 5.0) {
-        // expensive query (model fits): ONE warm run instead of the
-        // full median — but never record the cold warmup itself; a
-        // transient stall there (JIT, page-cache miss, competing
-        // process) would be indistinguishable from a real regression
-        once(q.build)
-      } else {
-        // a run that fails after a clean warmup marks the query failed
-        // rather than polluting (or hiding inside) the median
-        val timed = (1 to runs).map(_ => once(q.build))
-        if (timed.exists(_ < 0)) -1.0
-        else { val s = timed.sorted; s(s.length / 2) }
-      }
-    }
 
     // Deterministic order; registry order groups related queries so the
     // first touch of each table is paid inside its own family.
-    val selected = SparkEntry.registry
-      .filter(q => only.forall(_.contains(q.name)))
-    val results = selected.map(q => q.name -> timeOne(q))
+    val selected = Harness.select(only)
+    val results = selected.map(timeOne(spark, sfDir, _, runs))
 
     // Self-adjudication: full-suite numbers run 30-60% hot (GC and page
     // -cache contention from 100+ queries sharing one JVM), which in
@@ -137,12 +68,11 @@ object Bench {
     if (sfTag.isEmpty && only.isEmpty)
       System.err.println(
         s"[bench] no sf tag in '$sfDir' — outlier adjudication disabled")
-    val baselines = if (only.isDefined || sfTag.isEmpty) Map.empty[String, Double]
+    val baselines = if (only.nonEmpty || sfTag.isEmpty) Map.empty[String, Double]
       else loadBaselines(
         sys.env.getOrElse("SPARK_GRAFT_BASELINE", "BASELINE.md"), sfTag)
     val needRefocus = results
-      .filter { case (n, t) =>
-        t >= 0 && baselines.get(n).exists(b => t > 2 * b) }
+      .filter(r => r.ok && baselines.get(r.name).exists(r.seconds > 2 * _))
     // Refocus in a FRESH SparkContext (r15, VERDICT ask #1): the r14
     // same-JVM refocus of g10 still read 1.28x above the fresh-JVM
     // focused median — residual block-manager/broadcast state from 300+
@@ -152,19 +82,16 @@ object Bench {
     // (fresh context, warm JIT) instead of inheriting the suite's heap.
     if (needRefocus.nonEmpty) { spark.stop(); spark = newSession() }
     val focused = needRefocus
-      .map { case (n, _) =>
-        n -> timeOne(selected.find(_.name == n).get) }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val fq = focused.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
+      .map(r => timeOne(spark, sfDir, selected.find(_.name == r.name).get, runs))
+    def json(rs: Seq[Harness.Result]) = rs.map(timing)
+      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val tot = total(results)
     // full-precision per-query map goes to a git-tracked file — the
     // durable record rounds are compared on
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "bench_out.json")
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"focused":$fq,"sf":"$sfDir"}""" + "\n"
+      s"""{"metric":"total","value":$tot,"unit":"sec","queries":${json(results)},"focused":${json(focused)},"sf":"$sfDir"}""" + "\n"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath),
       fullJson)
     // sha16 sidecar: the same binding the stdout line carries, durable
@@ -172,9 +99,76 @@ object Bench {
     // canonical map is byte-identical to what this run produced
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outPath + ".sha16"), sha16(fullJson) + "\n")
-    println(renderLine(results, total, outPath, sfDir, focused.size,
-      sha16(fullJson)))
+    println(renderLine(results.map(timing), tot, outPath, sfDir,
+      focused.size, sha16(fullJson)))
     spark.stop()
+    sys.exit(Harness.exitStatus(results ++ focused))
+  }
+
+  /** Times one query: untimed sweep, warmup, then the median of `runs`
+    * (one warm run when the warmup exceeds 5 s). The first failure ends
+    * the query and is its result. */
+  private def timeOne(spark: SparkSession, sfDir: String, q: QueryDef,
+      runs: Int): Harness.Result = {
+    sweep(spark)
+    def once() = Harness.run(spark, sfDir, Seq(q))((_, df) => df.count()).head
+    val warmup = once()
+    if (!warmup.ok || runs < 1) warmup
+    else if (warmup.seconds > 5.0) {
+      // expensive query (model fits): ONE warm run instead of the
+      // full median — but never record the cold warmup itself; a
+      // transient stall there (JIT, page-cache miss, competing
+      // process) would be indistinguishable from a real regression
+      once()
+    } else {
+      // a run that fails after a clean warmup marks the query failed
+      // rather than polluting (or hiding inside) the median
+      var timed = Vector(once())
+      while (timed.size < runs && timed.last.ok) timed :+= once()
+      timed.find(!_.ok).getOrElse(timed.sortBy(_.seconds).apply(timed.size / 2))
+    }
+  }
+
+  /** A query's map entry: its seconds, or -1 when it failed. */
+  def timing(r: Harness.Result): (String, Double) =
+    r.name -> (if (r.ok) r.seconds else -1.0)
+
+  /** Suite total: every query's seconds, a failed one's elapsed wall
+    * time included, so a failure never lowers it. */
+  def total(results: Seq[Harness.Result]): Double = results.map(_.seconds).sum
+
+  /** Clean slate before each query. r13 adjudication: the graph
+    * family — last in registry order — ran +26% in-suite while
+    * focused medians sat at baseline; the mechanism is accumulated
+    * JVM state the ContextCleaner only releases asynchronously.
+    * r14's System.gc() helped the builder's machine but the
+    * recorded BENCH_r14 still spiked g10 4.29x, because a GC only
+    * ENQUEUES the weak refs — the cleaner thread then drains them
+    * (block-manager RPC per RDD/broadcast/shuffle) concurrently
+    * with the next timed run. r15 makes the sweep DETERMINISTIC
+    * instead of GC-timing-dependent:
+    *   1. blocking-unpersist every persistent RDD still registered
+    *      (localCheckpoint frames a query didn't — or couldn't —
+    *      release; synchronous block removal, no cleaner involved),
+    *   2. drop any cached plans,
+    *   3. one GC to enqueue dead broadcasts/shuffles, then a short
+    *      untimed drain window for the cleaner's async RPCs so they
+    *      don't land inside the next measurement.
+    * All untimed; ~0.2 s x |registry| of harness overhead. The
+    * SessionScoped memo frames (d04/d07 shared stage, s03b's pinned
+    * assignment) are exempt: they are localCheckpointed with
+    * truncated lineage, so sweeping them would hard-fail every later
+    * consumer — and re-materializing the shared stage per query is
+    * precisely the cost the memo (and the baseline it was recorded
+    * under) deliberately excludes. */
+  private def sweep(spark: SparkSession): Unit = {
+    val keep = graft.core.SessionScoped.livePersistedRddIds(spark)
+    spark.sparkContext.getPersistentRDDs
+      .filterNot { case (id, _) => keep(id) }
+      .values.foreach(_.unpersist(blocking = true))
+    spark.catalog.clearCache()
+    System.gc()
+    Thread.sleep(200)
   }
 
   /** Per-query baseline seconds from BASELINE.md's timing tables (rows

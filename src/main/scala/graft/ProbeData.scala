@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** One-off larger-scale probe data (VERDICT r4 §next #7): upsample an
@@ -47,13 +47,7 @@ object ProbeData {
     val out = args(1)
     val copies = args.lift(2).map(_.toInt).getOrElse(5)
     val off = 10000000L
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // events ts is TIMESTAMP(NANOS); read it as a raw long (the copies
     // are written as plain BIGINT, which Tables.events' DIV-1000
     // conversion handles identically)

@@ -1,13 +1,12 @@
 package graft.mlx
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable replacement for the reference's driver program
   * (`spark-submit ... Main <dataset.csv>...`): same CLI shape — one or
   * more flight CSVs plus a plane-data CSV — same outputs (per-model
   * RMSE/R² per selector), rendered deterministically.
   *
   * Usage: runMain graft.mlx.FlightApp <planes.csv> <flights.csv> [more...]
+  * (under spark-submit, its `--master` picks where it runs).
   *
   * Differences from the reference, by design (SURVEY §4.2):
   * multiple datasets UNION (the reference's loop kept only the last);
@@ -21,15 +20,7 @@ object FlightApp {
       "usage: FlightApp <planes.csv> <flights.csv> [flights2.csv ...]")
     val verbose = args.contains("-v")
     val paths = args.filterNot(_ == "-v")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-flight")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     val planes = FlightPipeline.readStringly(spark, paths.head)
     val flights = FlightPipeline.loadMany(spark, paths.tail.toSeq)

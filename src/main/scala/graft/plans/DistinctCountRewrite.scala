@@ -93,7 +93,7 @@ object DistinctCountRewrite extends Rule[LogicalPlan] {
 }
 
 /** `SparkSessionExtensions` hook:
-  * {{{ SparkSession.builder().withExtensions(new GraftExtensions) }}}
+  * {{{ builder.withExtensions(new GraftExtensions) }}}
   * or `spark.sql.extensions=graft.plans.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -284,16 +284,6 @@ object LateDataAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "LATE_DATA.json"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val json = fullJson(spark, sfDir)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json)
-    println(json)
-    spark.stop()
+    graft.Harness.auditMain(sfDir, out)(fullJson)
   }
 }
