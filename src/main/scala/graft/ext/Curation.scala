@@ -943,27 +943,8 @@ object Curation {
               .as("is_new"),
             expr(s"array_distinct(${Dedup.shingleExpr("text")})").as("sh"))
           .persist(lvl)
-        val sigCols = (0 until K).map(k =>
-          min(expr(s"ha + $k * hb")).as(s"sig_$k"))
-        val sigs = shingled
-          .select(col("doc_id"), col("is_new"), explode(col("sh")).as("s2"))
-          .select(col("doc_id"), col("is_new"),
-            expr(Dedup.sparkMd5Int60("s2")).as("ha"),
-            expr("CAST(conv(substring(md5(s2), 17, 14), 16, 10) AS BIGINT)")
-              .as("hb"))
-          .groupBy("doc_id", "is_new")
-          .agg(sigCols.head, sigCols.tail: _*)
-        val bandCols = (0 until K / bandRows).map { b =>
-          struct(lit(b).as("band"),
-            concat_ws(",",
-              (0 until bandRows).map(r => col(s"sig_${b * bandRows + r}")): _*)
-              .as("bv")).as(s"b$b")
-        }
-        val bands = sigs
-          .select(col("doc_id"), col("is_new"),
-            explode(array(bandCols: _*)).as("bb"))
-          .select(col("doc_id"), col("is_new"),
-            col("bb.band").as("band"), col("bb.bv").as("bv"))
+        val bands = Dedup.md5MinhashBands(shingled, K, bandRows,
+          Seq("doc_id", "is_new"))._2
         val index = bands.filter(!col("is_new"))
           .select(col("doc_id").as("old_id"), col("band"), col("bv"))
         val batch = bands.filter(col("is_new"))
@@ -1222,7 +1203,7 @@ object Curation {
     * the SAME pipeline over delta subsets and patch by association:
     * counts add/subtract, and the XOR content fingerprint composes
     * (`old ⊕ removed-contribs ⊕ added-contribs`). */
-  /** THE quality gate (x25/x27/x28/x29 all share this one definition —
+  /** THE quality gate (x25/x27/x28/x29b all share this one definition —
     * the file-header rule about load-bearing duplicated predicates):
     * gated languages, and at least `minTok` space-split tokens. DuckDB
     * mirror: `lang IN ('en','de','es','fr') AND
@@ -1505,76 +1486,6 @@ object Curation {
                FROM lab GROUP BY 1, 2 ORDER BY split, lang"""))
   }
 
-  /** x29 — model-in-the-loop quality filtering (Brown et al., "Language
-    * Models are Few-Shot Learners", NeurIPS 2020, Appendix A; Wenzek et
-    * al., "CCNet", LREC 2020): train a text classifier on weak labels
-    * derived from the rule-based gate, then score EVERY doc from its
-    * raw text — the distillation step that lets a cheap linear model
-    * replace hand rules at the corpus frontier (and generalize past
-    * them). Weak label = x25's gate (lang + length); features =
-    * hashed token counts; model = seeded logistic regression fit on a
-    * deterministic md5-half of the corpus; output = per-doc weak label,
-    * model prediction, and agreement, the filter-audit frame a curation
-    * run reviews before flipping the filter on.
-    *
-    * Scale shape: the training sample is a hash-gated subset (bounded
-    * by design at 100 TB: sample, don't fit the corpus); the fitted
-    * model is broadcast state and scoring is one narrow map pass.
-    * Model coefficients are engine-specific → rows-only, with the
-    * holdout-generalization law asserted in QualityClassifierSpec. */
-  val qualityClassifier: QueryDef = QueryDef(
-    "x29_quality_classifier",
-    (s, d) => {
-      import org.apache.spark.ml.Pipeline
-      import org.apache.spark.ml.classification.LogisticRegression
-      import org.apache.spark.ml.feature.{HashingTF, Tokenizer}
-      val labeled = Tables.documents(s, d)
-        .withColumn("label",
-          when(qualityGatePred(), 1.0).otherwise(0.0))
-      val train = labeled.filter(
-        expr("substring(md5(CAST(doc_id AS STRING)), 1, 1) < '8'"))
-      val pipe = new Pipeline().setStages(Array(
-        new Tokenizer().setInputCol("text").setOutputCol("toks"),
-        new HashingTF().setInputCol("toks").setOutputCol("features")
-          .setNumFeatures(4096),
-        new LogisticRegression().setMaxIter(20).setRegParam(0.01)))
-      val model = pipe.fit(train)
-      model.transform(labeled)
-        .select(col("doc_id"),
-          col("label").cast("long").as("weak_label"),
-          col("prediction").cast("long").as("predicted"),
-          (col("label") === col("prediction")).cast("long").as("agree"))
-        .orderBy("doc_id")
-    },
-    None)
-
-  /** x29b — x29's ORACLE-EXACT twin (VERDICT r6 next-step #2): the same
-    * model-in-the-loop pipeline shape — weak labels from the shared
-    * gate, train on a deterministic md5-half, score EVERY doc, emit the
-    * filter-audit frame — but the model is a closed-form nearest-
-    * prototype classifier (Rocchio 1971; Manning, Raghavan & Schütze,
-    * "Introduction to Information Retrieval" ch. 14) over md5-hashed
-    * token buckets, cross-multiplied into pure INTEGER weights:
-    *
-    *   w[b] = c1[b]·T0 − c0[b]·T1      (class token counts × opposing
-    *   score(doc) = Σ_tok w[bucket]     class totals — sign of the
-    *   predicted = score > 0            tf-proportion difference)
-    *
-    * Everything is 64-bit integer arithmetic — training AND scoring are
-    * order-independent and exactly mirrorable in SQL, which is what the
-    * LR twin (engine-specific L-BFGS doubles) can never be. VERDICT r6
-    * suggested pinning trained LR weights as literals; that would have
-    * required fitting at registry-construction time (a corpus action,
-    * breaking the lazy-build contract), so the twin pins the MODEL FORM
-    * instead of the coefficients.
-    *
-    * Scale shape: the training aggregation reduces to an F-row (1024)
-    * weight frame + a 1-row total — both broadcast; scoring is one
-    * explode → broadcast join → doc-keyed re-aggregation with map-side
-    * partial sums. Overflow bound: |w| ≤ T0·T1 and |score| ≤ tokens/doc
-    * × max|w|, so sampled training tokens must stay ≲ 3·10⁹ for int64 —
-    * at 100 TB tighten the md5 gate to more hex digits (the "sample,
-    * don't fit the corpus" discipline x29 already documents). */
   private val protoF = 1024
 
   /** The x29b scoring frame `(doc_id, label, score)` — weak gate label
@@ -1644,6 +1555,34 @@ object Curation {
          GROUP BY st.doc_id, st.label)"""
   }
 
+  /** x29b — model-in-the-loop quality filtering (Brown et al.,
+    * "Language Models are Few-Shot Learners", NeurIPS 2020, Appendix A;
+    * Wenzek et al., "CCNet", LREC 2020), ORACLE-EXACT: weak labels from
+    * the shared gate, train on a deterministic md5-half, score EVERY
+    * doc, emit the filter-audit frame. The model is a closed-form
+    * nearest-prototype classifier (Rocchio 1971; Manning, Raghavan &
+    * Schütze, "Introduction to Information Retrieval" ch. 14) over md5-hashed
+    * token buckets, cross-multiplied into pure INTEGER weights:
+    *
+    *   w[b] = c1[b]·T0 − c0[b]·T1      (class token counts × opposing
+    *   score(doc) = Σ_tok w[bucket]     class totals — sign of the
+    *   predicted = score > 0            tf-proportion difference)
+    *
+    * Everything is 64-bit integer arithmetic — training AND scoring are
+    * order-independent and exactly mirrorable in SQL, which a fitted
+    * logistic regression (engine-specific L-BFGS doubles) can never be.
+    * VERDICT r6 suggested pinning trained LR weights as literals; that
+    * would have required fitting at registry-construction time (a
+    * corpus action, breaking the lazy-build contract), so x29b pins the
+    * MODEL FORM instead of the coefficients.
+    *
+    * Scale shape: the training aggregation reduces to an F-row (1024)
+    * weight frame + a 1-row total — both broadcast; scoring is one
+    * explode → broadcast join → doc-keyed re-aggregation with map-side
+    * partial sums. Overflow bound: |w| ≤ T0·T1 and |score| ≤ tokens/doc
+    * × max|w|, so sampled training tokens must stay ≲ 3·10⁹ for int64 —
+    * at 100 TB tighten the md5 gate to more hex digits (sample, don't
+    * fit the corpus). */
   val qualityPrototype: QueryDef = {
     QueryDef(
       "x29b_quality_prototype",
@@ -3334,7 +3273,7 @@ object Curation {
     * Σ_tokens log p_target(tok)/p_raw(tok) between a target-domain
     * unigram model and the raw-corpus model, then keep the
     * target-resembling slice — the selection step between x14's
-    * mixture weighting and x29's trained classifier gate; here the
+    * mixture weighting and x29b's trained classifier gate; here the
     * target is the `en` slice and selection is the closed-form
     * score > 0 rule, i.e. "likelier under the target model").
     *
@@ -4550,7 +4489,7 @@ object Curation {
       budgetRebalance, decontaminateBloom, leakageSafeSplit,
       incrementalFuzzy, jsonlRoundtrip, zorderKey, kAnonymity, chunkOverlap,
       trainingManifest, snapshotDiff, manifestRefresh, releasePipeline,
-      qualityClassifier, qualityPrototype, calibrationBins,
+      qualityPrototype, calibrationBins,
       classifierMetrics, domainCap, scd2History,
       temperatureMix, datasetCard, canonicalSelection, weightedSample,
       epochShuffle, dpRelease, psiDrift, blocklistGate, curriculumOrder,

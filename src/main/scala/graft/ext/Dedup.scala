@@ -250,77 +250,73 @@ object Dedup {
       .orderBy("a_id", "b_id"),
     None)
 
-  /** 64-bit SimHash (Charikar, "Similarity estimation techniques from
-    * rounding algorithms", STOC 2002) per document: xxhash64 each token, per-bit ±1 votes,
-    * sign-pack into a long. One explode + one aggregate — linear at scale. */
-  def simhash(docs: DataFrame): DataFrame = {
-    val toks = docs.select(col("doc_id"),
-      explode(split(col("text"), " ")).as("tok"))
-    val hashed = toks.select(col("doc_id"), xxhash64(col("tok")).as("h"))
-    val voteCols = (0 until 64).map { i =>
+  /** SimHash (Charikar, "Similarity estimation techniques from rounding
+    * algorithms", STOC 2002) per document: `tokenHash` (a SQL expression
+    * over the token column `tok`) hashes each token, the low `bits` bits
+    * each get a ±1 vote per token, and the vote signs pack into a long.
+    * One explode + one aggregate — linear at scale. d03 runs
+    * `xxhash64(tok)` at 64 bits (engine-specific, rows-only); d11, d21
+    * and m05 run [[sparkMd5Int60]] at 60 bits, which
+    * [[simhashMd5SigsSql]] mirrors bit for bit in DuckDB. */
+  def simhash(docs: DataFrame, tokenHash: String, bits: Int): DataFrame = {
+    // The vote sums stay FUSED inside the aggregate (each computes its
+    // ±1 on the fly from `h`): the alternative — pre-projecting one int
+    // vote column per bit before the agg — was measured 2× slower (3.3 s
+    // vs 1.6 s focused sf0.1 median, md5 at 60 bits) because every token
+    // row then carries the materialized ints into the aggregation hash
+    // map. The r9 JIT variance this form once showed (1.2-2.5 s spread)
+    // was cured by the banded-signature localCheckpoint in
+    // [[multiProbePairs]], not by agg shape: post-fix 4-JVM spread is
+    // 1.52-1.90 s (±12%).
+    val hashed = docs
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+      .select(col("doc_id"), expr(tokenHash).as("h"))
+    val voteCols = (0 until bits).map { i =>
       sum(when(shiftright(col("h"), i).bitwiseAND(lit(1L)) === 1L, 1)
         .otherwise(-1)).as(s"b$i")
     }
     val votes = hashed.groupBy("doc_id").agg(voteCols.head, voteCols.tail: _*)
-    val packed = (0 until 64).map { i =>
+    val packed = (0 until bits).map { i =>
       when(col(s"b$i") > 0, lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
     votes.select(col("doc_id"), packed.as("simhash"))
   }
 
-  /** Banded SimHash near-dup candidates — the 100 TB path: each 64-bit
-    * signature splits into 4×16-bit bands; only pairs colliding on at
-    * least one band bucket are compared (equi shuffle on (band, value),
-    * never all-pairs). Guaranteed recall for hamming ≤ 3 (pigeonhole);
-    * approximate above. Output ⊆ the exact all-pairs result. */
-  def simhashBandedPairs(docs: DataFrame, maxHamming: Int): DataFrame = {
-    val sh = simhash(docs)
-    val bands = sh.select(col("doc_id"), col("simhash"),
-      explode(expr(
-        "transform(sequence(0, 3), b -> struct(b AS band, " +
-          "shiftright(simhash, b * 16) & 65535 AS bv))")).as("bb"))
-      .select(col("doc_id"), col("simhash"),
-        col("bb.band").as("band"), col("bb.bv").as("bv"))
-    val a = bands.select(col("doc_id").as("a_id"), col("simhash").as("a_sh"),
-      col("band"), col("bv"))
-    val b = bands.select(col("doc_id").as("b_id"), col("simhash").as("b_sh"),
-      col("band"), col("bv"))
-    a.join(b, Seq("band", "bv")).filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id", "a_sh", "b_sh").distinct()
-      .withColumn("hamming", expr("bit_count(a_sh ^ b_sh)"))
-      .filter(col("hamming") <= maxHamming)
-      .select("a_id", "b_id", "hamming")
-  }
-
-  /** Multi-probe banded SimHash pairs — EXACT at the covered radius,
-    * candidate generation a pure equi-join (the r10 VERDICT fix for
-    * d03's all-pairs BroadcastNestedLoopJoin).
+  /** Banded SimHash pairs — EXACT at the covered radius, candidate
+    * generation a pure equi-join (the r10 VERDICT fix for d03's
+    * all-pairs BroadcastNestedLoopJoin). The one SimHash pair path:
+    * d03 and d21 run it at probe radius 1, d11 and m05 at radius 0.
     *
     * Scheme (multi-index Hamming search, Norouzi et al. "Fast Search
     * in Hamming Space with Multi-Index Hashing", CVPR 2012): split the
-    * signature into `nBands` disjoint `bandBits`-bit bands; for radius
-    * ≤ 2·nBands − 1 the pigeonhole gives SOME band with ≤ 1 differing
-    * bit, so probing each band's value XOR {0, each single bit} —
-    * bandBits + 1 probe keys per band — guarantees a (band, value)
-    * equi-collision for every qualifying pair. Candidates are then
-    * hamming-filtered exactly, so output EQUALS the all-pairs result
-    * at `maxHamming` (asserted in DedupSpec against brute force).
+    * signature into `nBands` disjoint `bandBits`-bit bands. For
+    * hamming ≤ (radius + 1)·nBands − 1 the pigeonhole gives SOME band
+    * with ≤ `radius` differing bits, so probing each band's value XOR
+    * {0} (radius 0) or XOR {0, each single bit} (radius 1, bandBits + 1
+    * probe keys per band) guarantees a (band, value) equi-collision for
+    * every qualifying pair. Candidates are then hamming-filtered
+    * exactly, so output EQUALS the all-pairs result at `maxHamming`
+    * (asserted in DedupSpec against brute force).
     *
     * Scale shape: probe fan-out is a CONSTANT nBands·(bandBits+1) rows
-    * per doc (68 for 4×16-bit bands) into a (band, value) equi-join
-    * over 2^bandBits buckets per band — d09's shuffle shape with a
-    * bounded row multiplier, never a nested loop. The banded frame is
-    * localCheckpointed because it feeds both join sides (d11's
-    * signatures-table discipline: 4 rows/doc × ~32 B, text never
-    * enters). Skewed buckets (mass-duplicated content) get the d06/d10
+    * per doc at radius 1 (68 for 4×16-bit bands), nBands at radius 0,
+    * into a (band, value) equi-join over 2^bandBits buckets per band —
+    * a bounded row multiplier, never a nested loop. The banded frame is
+    * localCheckpointed because it feeds both join sides: without it
+    * Spark plans the whole signature pipeline (tokenize → hash → vote
+    * aggregates) twice, the dominant stage recomputed verbatim (r9
+    * focused bench: ~2× on m05/d11). It is a signatures table (nBands
+    * rows/doc × ~32 B, text never enters), not a cache of the input.
+    * Skewed buckets (mass-duplicated content) get the d06/d10
     * mega-bucket treatment upstream if needed — at the fixture scales
     * every bucket is tiny. */
   def multiProbePairs(sh: DataFrame, bandBits: Int, nBands: Int,
-      maxHamming: Int): DataFrame = {
-    require(maxHamming <= 2 * nBands - 1,
-      s"probe radius 1 over $nBands bands covers hamming <= ${2 * nBands - 1}")
+      maxHamming: Int, radius: Int): DataFrame = {
+    require(radius == 0 || radius == 1, s"probe radius $radius is not 0 or 1")
+    require(maxHamming <= (radius + 1) * nBands - 1,
+      s"probe radius $radius over $nBands bands covers hamming <= " +
+        s"${(radius + 1) * nBands - 1}")
     val m = (1L << bandBits) - 1
-    val masks = (Seq(0L) ++ (0 until bandBits).map(1L << _)).mkString(",")
     val bands = sh.select(col("doc_id"), col("simhash"),
       explode(expr(
         s"transform(sequence(0, ${nBands - 1}), b -> struct(b AS band, " +
@@ -328,9 +324,12 @@ object Dedup {
       .select(col("doc_id"), col("simhash"),
         col("bb.band").as("band"), col("bb.bv").as("bv"))
       .localCheckpoint()
+    val masks = (Seq(0L) ++ (0 until bandBits).map(1L << _)).mkString(",")
+    val probeBv =
+      if (radius == 0) col("bv")
+      else explode(expr(s"transform(array($masks), mm -> bv ^ mm)")).as("bv")
     val probes = bands.select(col("doc_id").as("a_id"),
-        col("simhash").as("a_sh"), col("band"),
-        explode(expr(s"transform(array($masks), mm -> bv ^ mm)")).as("bv"))
+      col("simhash").as("a_sh"), col("band"), probeBv)
     val exacts = bands.select(col("doc_id").as("b_id"),
       col("simhash").as("b_sh"), col("band"), col("bv"))
     probes.join(exacts, Seq("band", "bv"))
@@ -352,12 +351,12 @@ object Dedup {
     * would leave 3-4-bit bands whose buckets collapse). Radius 7 is the
     * largest multi-probe-coverable radius for 4 bands at probe radius 1,
     * and the output is EXACT at that radius (not a candidate subset):
-    * equal to brute-force all-pairs, asserted in DedupSpec. d09 stays
-    * the probe-free banded form (exact at ≤ 3); d21 is the md5-portable
-    * oracle-exact twin of THIS shape at the same radius. */
+    * equal to brute-force all-pairs, asserted in DedupSpec. d21 is the
+    * md5-portable oracle-exact twin of THIS shape at the same radius. */
   val simhashPairs: QueryDef = QueryDef(
     "d03_dedup_simhash",
-    (s, d) => multiProbePairs(simhash(Tables.documents(s, d)), 16, 4, 7)
+    (s, d) => multiProbePairs(
+        simhash(Tables.documents(s, d), "xxhash64(tok)", 64), 16, 4, 7, 1)
       .orderBy("a_id", "b_id"),
     None)
 
@@ -717,17 +716,6 @@ object Dedup {
              SELECT component, count(*) AS n_members
              FROM labels GROUP BY component ORDER BY component"""))
 
-  /** d09 — the banded-SimHash scale path as its own registered query.
-    * maxHamming = 3 is the pigeonhole-exact radius for 4×16-bit bands
-    * (3 differing bits can dirty at most 3 of the 4 bands), so at this
-    * radius the banded output EQUALS the all-pairs result — asserted in
-    * DedupSpec — while the plan stays an equi shuffle on (band, value). */
-  val simhashBanded: QueryDef = QueryDef(
-    "d09_dedup_simhash_banded",
-    (s, d) => simhashBandedPairs(Tables.documents(s, d), 3)
-      .orderBy("a_id", "b_id"),
-    None)
-
   /** Portable 60-bit integer hash — the piece that makes d10/d11
     * oracle-exact: md5 hex chars 2-16 parsed as an integer. Both sides
     * verified bit-equal (md5('abc') → 370089762377648 on each). */
@@ -747,6 +735,56 @@ object Dedup {
               substring(md5($arg), i, 1)) - 1 AS BIGINT))),
           (a, d) -> a * 16 + d)"""
 
+  /** Distinct word-3-gram shingles `(doc_id, sh)` of a documents frame,
+    * fanned out for the CPU-heavy hash passes that follow. */
+  def distinctShingles(docs: DataFrame): DataFrame =
+    Tables.fanOutForCpu(
+        docs.select(col("doc_id"), col("text")), col("doc_id"))
+      .select(col("doc_id"),
+        expr(s"array_distinct(${shingleExpr("text")})").as("sh"))
+
+  /** The md5 MinHash stage behind d10, d17, x20 and [[bandKeys]]: per
+    * `keys` group of `shingled` (keys + a distinct-shingle array `sh`),
+    * `numHashes` min-signatures `sig_k`, and their band keys — one
+    * (keys, band, bv) row per group per band, `bv` the comma-joined
+    * slice of `bandRows` signatures (pure string equality on both
+    * engines). Returns (sigs, bands); bands derives from sigs, so a
+    * caller that persists sigs before its first action reads the
+    * cached frame in every branch.
+    *
+    * ONE md5 per shingle, then the Carter-Wegman 2-universal family
+    * h_k = a + k·b over its two halves (a: 60 bits from hex chars 2-16,
+    * b: 56 bits from chars 17-30) — no overflow (7·2^56 + 2^60 < 2^63),
+    * no per-k rehash, and pure arithmetic for the SQL mirrors. */
+  def md5MinhashBands(shingled: DataFrame, numHashes: Int, bandRows: Int,
+      keys: Seq[String] = Seq("doc_id")): (DataFrame, DataFrame) = {
+    require(numHashes % bandRows == 0, "bands must tile the signature")
+    val kc = keys.map(col)
+    val sigCols = (0 until numHashes).map(k =>
+      min(expr(s"ha + $k * hb")).as(s"sig_$k"))
+    val sigs = shingled
+      .select(kc :+ explode(col("sh")).as("s"): _*)
+      // ONE md5 evaluation per shingle, both integer halves sliced from
+      // it — don't lean on codegen subexpression elimination for the
+      // hottest expression in the query
+      .select(kc :+ md5(col("s")).as("m"): _*)
+      .select(kc ++ Seq(
+        expr("CAST(conv(substring(m, 2, 15), 16, 10) AS BIGINT)").as("ha"),
+        expr("CAST(conv(substring(m, 17, 14), 16, 10) AS BIGINT)").as("hb")): _*)
+      .groupBy(kc: _*)
+      .agg(sigCols.head, sigCols.tail: _*)
+    val bandCols = (0 until numHashes / bandRows).map { b =>
+      struct(lit(b).as("band"),
+        concat_ws(",",
+          (0 until bandRows).map(r => col(s"sig_${b * bandRows + r}")): _*)
+          .as("bv")).as(s"b$b")
+    }
+    val bands = sigs
+      .select(kc :+ explode(array(bandCols: _*)).as("bb"): _*)
+      .select(kc ++ Seq(col("bb.band").as("band"), col("bb.bv").as("bv")): _*)
+    (sigs, bands)
+  }
+
   /** Core of d10: md5-keyed MinHash pairs over an arbitrary documents
     * frame, with the same mega-bucket hygiene as d06: buckets larger
     * than maxBucketSize are dropped (their pairing is quadratic noise)
@@ -761,44 +799,15 @@ object Dedup {
       bandRows: Int = 4,
       theta: Double = 0.5,
       maxBucketSize: Int = 64): DataFrame = {
-    require(numHashes % bandRows == 0, "bands must tile the signature")
-    val shingled = Tables.fanOutForCpu(
-        docs.select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"),
-        expr(s"array_distinct(${shingleExpr("text")})").as("sh"))
+    val shingled = distinctShingles(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ONE md5 per shingle, then the Carter-Wegman 2-universal family
-    // h_k = a + k·b over its two halves (a: 60 bits from hex chars 2-16,
-    // b: 56 bits from chars 17-30) — no overflow (7·2^56 + 2^60 < 2^63),
-    // no per-k rehash, and pure arithmetic for the SQL mirror.
-    val sigCols = (0 until numHashes).map(k =>
-      min(expr(s"ha + $k * hb")).as(s"sig_$k"))
+    val (sigs, bands) = md5MinhashBands(shingled, numHashes, bandRows)
     // cached: sigs feeds THREE branches (banding, dup-rep aggregate, and
     // the dup-cluster join) — uncached, each branch would re-run the
     // md5+conv hash pass over the whole shingle set. One row per doc ×
     // numHashes longs, so the cache is corpus-count-sized, not
     // corpus-sized.
-    val sigs = shingled
-      .select(col("doc_id"), explode(col("sh")).as("s"))
-      // ONE md5 evaluation per shingle, both integer halves sliced from
-      // it — don't lean on codegen subexpression elimination for the
-      // hottest expression in the query
-      .select(col("doc_id"), md5(col("s")).as("m"))
-      .select(col("doc_id"),
-        expr("CAST(conv(substring(m, 2, 15), 16, 10) AS BIGINT)").as("ha"),
-        expr("CAST(conv(substring(m, 17, 14), 16, 10) AS BIGINT)").as("hb"))
-      .groupBy("doc_id")
-      .agg(sigCols.head, sigCols.tail: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bandCols = (0 until numHashes / bandRows).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws(",",
-          (0 until bandRows).map(r => col(s"sig_${b * bandRows + r}")): _*)
-          .as("bv")).as(s"b$b")
-    }
-    val bands = sigs
-      .select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bv").as("bv"))
+    sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bigBuckets = bands.groupBy("band", "bv")
       .agg(count(lit(1)).as("bsz"))
       .filter(col("bsz") > maxBucketSize)
@@ -843,31 +852,8 @@ object Dedup {
     * share every band unconditionally, so an index probe on (band, bv)
     * can never miss an exact dup; near-dups surface with the standard
     * banded-LSH probability. */
-  def bandKeys(docs: DataFrame, numHashes: Int, bandRows: Int): DataFrame = {
-    require(numHashes % bandRows == 0, "bands must tile the signature")
-    val shingled = Tables.fanOutForCpu(
-        docs.select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"),
-        expr(s"array_distinct(${shingleExpr("text")})").as("sh"))
-    val sigCols = (0 until numHashes).map(k =>
-      min(expr(s"ha + $k * hb")).as(s"sig_$k"))
-    val sigs = shingled
-      .select(col("doc_id"), explode(col("sh")).as("s"))
-      .select(col("doc_id"), md5(col("s")).as("m"))
-      .select(col("doc_id"),
-        expr("CAST(conv(substring(m, 2, 15), 16, 10) AS BIGINT)").as("ha"),
-        expr("CAST(conv(substring(m, 17, 14), 16, 10) AS BIGINT)").as("hb"))
-      .groupBy("doc_id")
-      .agg(sigCols.head, sigCols.tail: _*)
-    val bandCols = (0 until numHashes / bandRows).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws(",",
-          (0 until bandRows).map(r => col(s"sig_${b * bandRows + r}")): _*)
-          .as("bv")).as(s"b$b")
-    }
-    sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bv").as("bv"))
-  }
+  def bandKeys(docs: DataFrame, numHashes: Int, bandRows: Int): DataFrame =
+    md5MinhashBands(distinctShingles(docs), numHashes, bandRows)._2
 
   /** DuckDB CTE chain mirroring [[minhashMd5Pairs]] over `input` (any
     * relation with doc_id + text), ending in `${p}pairs(a_id, b_id,
@@ -958,74 +944,21 @@ object Dedup {
                ORDER BY a_id, b_id"""))
   }
 
-  /** 60-bit SimHash over the md5 token hash — the oracle-portable
-    * sibling of [[simhash]] (which uses xxhash64, engine-specific).
-    * Same Charikar scheme: per-token hash, per-bit ±1 votes, sign-pack. */
-  def simhashMd5(docs: DataFrame): DataFrame = {
-    // The 60 vote sums stay FUSED inside the aggregate (each computes
-    // its ±1 on the fly from `h`): the alternative — pre-projecting 60
-    // int vote columns before the agg — was measured 2× slower (3.3 s
-    // vs 1.6 s focused sf0.1 median) because every token row then
-    // carries 60 materialized ints into the aggregation hash map. The
-    // r9 JIT variance this form once showed (1.2-2.5 s spread) was
-    // cured by the banded-signature localCheckpoint, not by agg shape:
-    // post-fix 4-JVM spread is 1.52-1.90 s (±12%).
-    val hashed = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .select(col("doc_id"), expr(sparkMd5Int60("tok")).as("h"))
-    val voteCols = (0 until 60).map { i =>
-      sum(when(shiftright(col("h"), i).bitwiseAND(lit(1L)) === 1L, 1)
-        .otherwise(-1)).as(s"b$i")
-    }
-    val votes = hashed.groupBy("doc_id").agg(voteCols.head, voteCols.tail: _*)
-    val packed = (0 until 60).map { i =>
-      when(col(s"b$i") > 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    votes.select(col("doc_id"), packed.as("simhash"))
-  }
-
-  /** Banded candidate pairs over [[simhashMd5]] signatures: 4×15-bit
-    * bands, equi-join candidates, hamming filter. The ONE implementation
-    * both the registered d11 query and its spec assert on. */
-  def simhashMd5BandedPairs(docs: DataFrame, maxHamming: Int): DataFrame = {
-    val sh = simhashMd5(docs)
-    // localCheckpoint: the banded frame feeds BOTH sides of the
-    // candidate self-join, and without materialization Spark plans the
-    // whole signature pipeline (tokenize → md5 → 60 vote aggregates)
-    // twice — the dominant stage of the query, recomputed verbatim
-    // (r9 focused bench: ~2× on m05/d11). The materialized frame is
-    // tiny relative to the corpus (4 rows/doc × ~32 bytes — text never
-    // enters it), so at 100 TB this is a deliberate signatures-table
-    // write, not a cache of the input.
-    val bands = sh.select(col("doc_id"), col("simhash"),
-      explode(expr(
-        "transform(sequence(0, 3), b -> struct(b AS band, " +
-          "shiftright(simhash, b * 15) & 32767 AS bv))")).as("bb"))
-      .select(col("doc_id"), col("simhash"),
-        col("bb.band").as("band"), col("bb.bv").as("bv"))
-      .localCheckpoint()
-    val a = bands.select(col("doc_id").as("a_id"),
-      col("simhash").as("a_sh"), col("band"), col("bv"))
-    val b = bands.select(col("doc_id").as("b_id"),
-      col("simhash").as("b_sh"), col("band"), col("bv"))
-    a.join(b, Seq("band", "bv")).filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id", "a_sh", "b_sh").distinct()
-      .withColumn("hamming", expr("bit_count(a_sh ^ b_sh)"))
-      .filter(col("hamming") <= maxHamming)
-      .select("a_id", "b_id", "hamming")
-  }
-
-  /** d11 — ORACLE-EXACT banded SimHash near-dup pairs: [[simhashMd5]]
-    * signatures split into 4×15-bit bands (pigeonhole-exact at hamming
-    * ≤ 3, like d09), candidates from the band equi-join only, and the
-    * ENTIRE chain — 60 per-bit vote aggregates, sign-packing, banding,
-    * hamming filter — mirrored in DuckDB SQL. d03/d09 stay as the
-    * engine-native xxhash64 fast paths; this is the verification twin. */
+  /** d11 — ORACLE-EXACT banded SimHash near-dup pairs: the md5 60-bit
+    * [[simhash]] signatures split into 4×15-bit bands and searched by
+    * [[multiProbePairs]] at probe radius 0 (pigeonhole-exact at hamming
+    * ≤ 3), candidates from the band equi-join only, and the ENTIRE
+    * chain — 60 per-bit vote aggregates, sign-packing, banding, hamming
+    * filter — mirrored in DuckDB SQL. d03 stays as the engine-native
+    * xxhash64 fast path at radius 7; this is the verification twin of
+    * the banded shape. */
   val simhashMd5Banded: QueryDef = {
     val maxHamming = 3
     QueryDef(
       "d11_dedup_simhash_md5",
-      (s, d) => simhashMd5BandedPairs(Tables.documents(s, d), maxHamming)
+      (s, d) => multiProbePairs(
+          simhash(Tables.documents(s, d), sparkMd5Int60("tok"), 60),
+          15, 4, maxHamming, 0)
         .orderBy("a_id", "b_id"),
       Some {
         s"""WITH $simhashMd5SigsSql,
@@ -1045,8 +978,8 @@ object Dedup {
   }
 
   /** DuckDB CTE chain `toks → hx → votes → sigs` producing `(doc_id,
-    * sh)` — the one SQL mirror of [[simhashMd5]], shared by the d11
-    * and d21 oracles. */
+    * sh)` — the one SQL mirror of the md5 60-bit [[simhash]], shared by
+    * the d11 and d21 oracles. */
   def simhashMd5SigsSql: String = {
     val votes = (0 until 60).map(i =>
       s"sum(CASE WHEN (h >> $i) & 1 = 1 THEN 1 ELSE -1 END) AS b$i")
@@ -1063,7 +996,7 @@ object Dedup {
   }
 
   /** d21 — ORACLE-EXACT multi-probe SimHash pairs at Hamming ≤ 7: the
-    * md5-portable twin of d03's restated contract. [[simhashMd5]]'s
+    * md5-portable twin of d03's restated contract. The md5 [[simhash]]'s
     * 60-bit signature in 4×15-bit bands with probe radius 1 (16 probe
     * keys per band — the band value XOR {0, each single bit}); by the
     * multi-index pigeonhole ([[multiProbePairs]]) candidates cover
@@ -1076,8 +1009,10 @@ object Dedup {
     val maxHamming = 7
     QueryDef(
       "d21_dedup_simhash_multiprobe",
-      (s, d) => multiProbePairs(simhashMd5(Tables.documents(s, d)), 15, 4,
-        maxHamming).orderBy("a_id", "b_id"),
+      (s, d) => multiProbePairs(
+          simhash(Tables.documents(s, d), sparkMd5Int60("tok"), 60),
+          15, 4, maxHamming, 1)
+        .orderBy("a_id", "b_id"),
       Some {
         val masks = (Seq(0L) ++ (0 until 15).map(1L << _)).mkString(", ")
         s"""WITH $simhashMd5SigsSql,
@@ -1260,7 +1195,7 @@ object Dedup {
     * The coarse quantizer is the first `kCentroids` corpus vectors by
     * id — pinned DATA, not engine-seeded model state, which is what
     * makes the whole chain oracle-expressible where a KMeans quantizer
-    * (s03) cannot be: both engines assign each vector to its
+    * cannot be: both engines assign each vector to its
     * max-dot centroid with the same sequential double fold and the
     * same (dot DESC, centroid id ASC) tiebreak.
     *
@@ -1565,33 +1500,10 @@ object Dedup {
     QueryDef(
       "d17_minhash_calibration",
       (s, d) => {
-        val docs = Tables.documents(s, d)
-        val shingled = Tables.fanOutForCpu(
-            docs.select(col("doc_id"), col("text")), col("doc_id"))
-          .select(col("doc_id"),
-            expr(s"array_distinct(${shingleExpr("text")})").as("sh"))
+        val shingled = distinctShingles(Tables.documents(s, d))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val sigCols = (0 until K).map(k =>
-          min(expr(s"ha + $k * hb")).as(s"sig_$k"))
-        val sigs = shingled
-          .select(col("doc_id"), explode(col("sh")).as("sg"))
-          .select(col("doc_id"), md5(col("sg")).as("m"))
-          .select(col("doc_id"),
-            expr("CAST(conv(substring(m, 2, 15), 16, 10) AS BIGINT)").as("ha"),
-            expr("CAST(conv(substring(m, 17, 14), 16, 10) AS BIGINT)").as("hb"))
-          .groupBy("doc_id")
-          .agg(sigCols.head, sigCols.tail: _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val bandCols = (0 until K / bandRows).map { b =>
-          struct(lit(b).as("band"),
-            concat_ws(",",
-              (0 until bandRows).map(r => col(s"sig_${b * bandRows + r}")): _*)
-              .as("bv")).as(s"b$b")
-        }
-        val bands = sigs.select(col("doc_id"),
-          explode(array(bandCols: _*)).as("bb"))
-          .select(col("doc_id"), col("bb.band").as("band"),
-            col("bb.bv").as("bv"))
+        val (sigs, bands) = md5MinhashBands(shingled, K, bandRows)
+        sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val cand = bands.select(col("doc_id").as("a_id"), col("band"),
           col("bv"))
           .join(bands.select(col("doc_id").as("b_id"), col("band"),
@@ -2426,7 +2338,7 @@ object Dedup {
     * al. ICDE 2006 prefix filter; Bayardo et al. WWW 2007 all-pairs;
     * Vernica et al. SIGMOD 2010 for the symmetric self-join form):
     * the OTHER standard candidate generator next to the repo's
-    * banding family (d02/d09 MinHash/SimHash bands) — and unlike
+    * banding family (d02/d11 MinHash/SimHash bands) — and unlike
     * banding it is LOSSLESS: under any total token order, two sets
     * with Jaccard ≥ θ must share a token inside their length
     * |s| − ⌈θ·|s|⌉ + 1 prefixes, so candidates-from-prefixes followed
@@ -2544,7 +2456,7 @@ object Dedup {
 
   val all: Seq[QueryDef] =
     Seq(exact, exactByFingerprint, minhash, minhashNative, simhashPairs,
-      ngramJaccard, embeddingCosine, components, simhashBanded, minhashMd5,
+      ngramJaccard, embeddingCosine, components, minhashMd5,
       simhashMd5Banded, substringSpans, spanRemoval, semanticDedup,
       incrementalSemantic, containmentPairs, minhashCalibration,
       normalizedExact, cdcChunking, dedupEval, simhashMultiProbe,

@@ -224,7 +224,9 @@ object Multimodal {
         val decoded = media.select(col("doc_id"),
           col("blob").cast("string").as("text"))
         val meta = media.select(col("doc_id"), col("meta.source").as("source"))
-        Dedup.simhashMd5BandedPairs(decoded, maxHamming)
+        Dedup.multiProbePairs(
+            Dedup.simhash(decoded, Dedup.sparkMd5Int60("tok"), 60),
+            15, 4, maxHamming, 0)
           .join(meta.select(col("doc_id").as("a_id"), col("source").as("a_source")),
             "a_id")
           .join(meta.select(col("doc_id").as("b_id"), col("source").as("b_source")),

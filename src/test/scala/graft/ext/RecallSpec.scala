@@ -12,17 +12,6 @@ class RecallSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val sf = TestSpark.sf0001
 
-  test("IVF ANN (nprobe=4/16) recalls >= 60% of exact cosine top-5") {
-    val exact = Similarity.cosineTopK.build(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = Similarity.annIvf.build(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (exact & ivf).size.toDouble / exact.size
-    // structureless random embeddings are the worst case for coarse
-    // quantization; observed 0.64 with these seeds
-    assert(recall >= 0.60, s"ivf recall=$recall")
-  }
-
   test("pinned-centroid IVF (s03b) recalls >= 60% of exact cosine top-5") {
     val exact = Similarity.cosineTopK.build(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -45,7 +45,6 @@ class PlanGuardSpec extends AnyFunSuite {
     "e06_heavy_hitters" -> "1-row candidate-summary broadcast",
     "st09_funnel_steps" -> "1-row funnel-window scalar broadcast",
     "s01_cosine_topk" -> "bounded query-vector set broadcast (corpus never shuffles)",
-    "s03_ann_ivf" -> "bounded centroid/query set broadcast",
     "s03b_ann_ivf_pinned" -> "bounded probe stage: query set x pinned centroid broadcast",
     "s08_ann_recall" -> "composes s01+s03b; inherits s03b's bounded query x centroid probe stage",
     "s05_ann_int8" -> "bounded query-vector set broadcast",

@@ -10,7 +10,11 @@ history tables below it are the provenance appendix.
 Canonical rule: the LAST `| <query> | 0.1 | <sec> |` row in file order
 (i.e. the most recent re-record; three-column batch rows are how every
 round has recorded baselines since r5). Multi-column probe tables are
-scale evidence, not baseline rows, and are ignored here.
+scale evidence, not baseline rows, and are ignored here. Only queries
+in SURVEY.md's generated registry table (which RegistryTableSpec keeps
+equal to the code) get a canonical row, so a retired query's history
+rows stay as provenance without reviving it; run
+`tools/gen_registry.sh` first.
 
 Usage: python3 tools/gen_baseline.py            # rewrite in place
        python3 tools/gen_baseline.py --check    # exit 1 if stale
@@ -27,6 +31,20 @@ END = "<!-- baseline:end -->"
 PATH = "BASELINE.md"
 
 ROW = re.compile(r"^\| ([a-z][a-z0-9_]+) \| 0\.1 \| ([0-9]+\.?[0-9]*) \|")
+
+REG_BEGIN = "<!-- registry:begin -->"
+REG_END = "<!-- registry:end -->"
+REG_ROW = re.compile(r"^\| ([a-z][a-z0-9_]+) \| ")
+
+
+def registry() -> set[str]:
+    """Query names in SURVEY.md's generated registry table."""
+    txt = open("SURVEY.md").read()
+    b, e = txt.find(REG_BEGIN), txt.find(REG_END)
+    if b < 0 or e < 0 or e <= b:
+        raise SystemExit("SURVEY.md lacks the registry:begin/end markers")
+    return {m.group(1) for line in txt[b:e].splitlines()
+            if (m := REG_ROW.match(line))}
 
 
 def main() -> int:
@@ -45,7 +63,8 @@ def main() -> int:
         if m:
             last[m.group(1)] = float(m.group(2))
             n_records[m.group(1)] = n_records.get(m.group(1), 0) + 1
-    rows = sorted(last.items())
+    names = registry()
+    rows = sorted((q, sec) for q, sec in last.items() if q in names)
     total = sum(sec for _, sec in rows)
     out = [
         "",
